@@ -1269,34 +1269,36 @@ def _q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3.4 s -> 2.4 s warm at 100k events with 8). ~12.5k events per
     # state partition, floored at 4; restored in the finally block.
     _prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(4, min(int(_prev_shuffle), total_rows // 12_500))),
-    )
-    # idle_flush far beyond the run: only gap-rule closures are emitted,
-    # which is the deterministic subset (open sessions depend on wall
-    # clock, closed ones only on the data)
-    closed = sessionize_stream(stream, gap_seconds=1800, idle_flush_ms=3_600_000)
-    name = "sess_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        closed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # with ProcessingTimeTimeout state, the availableNow query keeps
-    # scheduling empty batches to evaluate timers and never
-    # self-terminates: poll until the CUMULATIVE committed input rows
-    # (progress entries are emitted on batch COMPLETION; batchId-keyed
-    # so the rolling recentProgress window cannot double-count) reach
-    # the exact source row count — robust even if the file source ever
-    # splits the input into several data batches with interleaved
-    # empty timer batches (ADVICE r03).  Fail loudly otherwise —
-    # stopping an in-flight batch would silently emit a partial table.
-    import time
-
+    q = None
     try:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(max(4, min(int(_prev_shuffle), total_rows // 12_500))),
+        )
+        # idle_flush far beyond the run: only gap-rule closures are
+        # emitted, which is the deterministic subset (open sessions
+        # depend on wall clock, closed ones only on the data)
+        closed = sessionize_stream(stream, gap_seconds=1800, idle_flush_ms=3_600_000)
+        name = "sess_stream_" + uuid.uuid4().hex[:8]
+        q = (
+            closed.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        # with ProcessingTimeTimeout state, the availableNow query keeps
+        # scheduling empty batches to evaluate timers and never
+        # self-terminates: poll until the CUMULATIVE committed input
+        # rows (progress entries are emitted on batch COMPLETION;
+        # batchId-keyed so the rolling recentProgress window cannot
+        # double-count) reach the exact source row count — robust even
+        # if the file source ever splits the input into several data
+        # batches with interleaved empty timer batches (ADVICE r03).
+        # Fail loudly otherwise — stopping an in-flight batch would
+        # silently emit a partial table.
+        import time
+
         committed: dict[int, int] = {}
         done = False
         # 0.1 s poll (r07): with ProcessingTimeTimeout the query keeps
@@ -1317,8 +1319,10 @@ def _q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "memory-sink table"
             )
     finally:
-        q.stop()
-        q.awaitTermination(120)
+        # restored on every exit path, including a failed start
+        if q is not None:
+            q.stop()
+            q.awaitTermination(120)
         spark.conf.set("spark.sql.shuffle.partitions", _prev_shuffle)
     dur_us = F.unix_micros("session_end") - F.unix_micros("session_start")
     out = (

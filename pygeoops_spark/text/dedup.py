@@ -320,7 +320,10 @@ def minhash_signatures(
 
 
 def _signature_cols(k: int) -> list[Column]:
-    # ANSI-safe arithmetic: keep x and a below 2^31 so x*a + b < 2^63
+    # h(x) = ((x mod p)*a + b) mod p. The outer modulus is what makes
+    # the permutations differ: without it h grows with x mod p for every
+    # (a, b), so all k would pick the same minimum shingle. ANSI-safe:
+    # x mod p and a stay below 2^31, so x*a + b < 2^62 never overflows
     # (the driver session may run with spark.sql.ansi.enabled=true,
     # where silent long wraparound becomes a runtime error)
     m31 = (1 << 31) - 1
@@ -328,7 +331,9 @@ def _signature_cols(k: int) -> list[Column]:
     def _perm(a: int, b: int):
         # single-arg lambda: pyspark introspects arity (2-arg means
         # (element, index)), so the params must close over a/b
-        return lambda x: F.pmod(x, F.lit(m31)) * F.lit(a % m31) + F.lit(b % m31)
+        return lambda x: F.pmod(
+            F.pmod(x, F.lit(m31)) * F.lit(a % m31) + F.lit(b % m31), F.lit(m31)
+        )
 
     return [
         F.array_min(F.transform("_aset", _perm(a, b))).alias(f"mh_{j}")
@@ -474,8 +479,11 @@ def simhash_sig_expr(bits: int = 64) -> Column:
         m = len(hs)
         if not m:
             return pd.Series([], dtype="int64")
-        lens = np.fromiter((len(a) for a in hs), dtype=np.int64, count=m)
-        nv = n.to_numpy(np.int64)
+        null = hs.isna().to_numpy()
+        lens = np.fromiter(
+            (0 if a is None else len(a) for a in hs), dtype=np.int64, count=m
+        )
+        nv = n.fillna(0).to_numpy(np.int64)
         out = np.zeros(m, dtype=np.uint64)
         nz = np.nonzero(lens > 0)[0]
         if nz.size:
@@ -491,7 +499,9 @@ def simhash_sig_expr(bits: int = 64) -> Column:
                 cnt = np.add.reduceat(bit.view(np.int64), starts)
                 acc |= (2 * cnt > half).astype(np.uint64) << np.uint64(b)
             out[nz] = acc
-        return pd.Series(out.view(np.int64))
+        sig = pd.Series(out.view(np.int64))
+        # a NULL word-hash array has no signature
+        return sig.astype("Int64").mask(null) if null.any() else sig
 
     return _sig("_hs", "_n")
 

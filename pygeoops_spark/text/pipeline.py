@@ -4,48 +4,78 @@ sessionization.
 * connected_components — alternating large-star/small-star (Kiveris et
   al., "Connected Components in MapReduce and Beyond"): converges in
   O(log n) rounds instead of the O(graph diameter) of naive min-label
-  propagation, each round two groupBy shuffles over the (shrinking)
-  edge set, localCheckpoint-bounded lineage. The standard survivor-
-  selection step after MinHash/Jaccard pair generation at corpus scale
-  — at 10^12 docs the round count, not the per-round shuffle, is the
-  scale killer (VERDICT r01 'what's wrong' #3).
+  propagation; each round is three exchanges over the (shrinking) edge
+  set plus one per-node fixed-point aggregate, localCheckpoint-bounded
+  lineage. The standard survivor-selection step after MinHash/Jaccard
+  pair generation at corpus scale — at 10^12 docs the round count, not
+  the per-round shuffle, is the scale killer (VERDICT r01 'what's
+  wrong' #3).
 * sessionize — classic gap-based sessionization over an event stream
   (window lag + cumulative sum; one shuffle on user_id).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
 def _large_star(e: DataFrame) -> DataFrame:
     """For each node u (edges read in both directions), connect every
-    strictly-larger neighbor to m = min(N(u) + {u})."""
+    strictly-larger neighbor to m = min(N(u) + {u}). The min is a window
+    over u (one exchange), not a groupBy joined back; no distinct, since
+    the small star that follows deduplicates its own output."""
     nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = nbrs.groupBy("u").agg(F.min("v").alias("m"))
-    mins = mins.select("u", F.least("m", "u").alias("m"))
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
     return (
-        nbrs.join(mins, "u")
+        nbrs.withColumn("m", m)
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
     )
 
 
 def _small_star(e: DataFrame) -> DataFrame:
     """Canonicalize edges larger->smaller; for each node u connect all
-    (smaller) neighbors and u itself to m = min neighbor."""
-    c = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-    mins = c.groupBy("u").agg(F.min("v").alias("m"))
-    out = (
-        c.join(mins, "u")
-        .where(F.col("v") != F.col("m"))
+    (smaller) neighbors and u itself to m = min neighbor. Input edges
+    carry no self pairs, so every output edge points larger->smaller."""
+    c = e.select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    ).withColumn("m", F.min("v").over(Window.partitionBy("u")))
+    return (
+        c.where(F.col("v") != F.col("m"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(mins.select(F.col("u"), F.col("m").alias("v")))
+        .union(c.select("u", F.col("m").alias("v")))
+        .distinct()
     )
-    return out.where(F.col("u") != F.col("v")).distinct()
+
+
+def _star_labels(e: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(node, component, star): one per-node aggregate over an edge set
+    that is both the fixed-point test and the labels. The edge set is a
+    forest of stars on each component's minimum node iff `star` holds
+    for every node: its out-edges point larger->smaller at one target,
+    and a node with an out-edge is no edge's target. A node's component
+    is then its out-edge target, or itself. `nodes` (column u) adds
+    nodes without edges."""
+    none = F.lit(None).cast("long")
+    rows = (
+        e.select(
+            F.col("u").alias("node"), F.col("v").alias("out"), F.lit(False).alias("tgt")
+        )
+        .union(e.select("v", none, F.lit(True)))
+        .union(nodes.select("u", none, F.lit(False)))
+    )
+    node, lo, hi = F.col("node"), F.min("out"), F.max("out")
+    star = hi.isNull() | ((hi < node) & (lo == hi) & ~F.bool_or("tgt"))
+    return rows.groupBy("node").agg(
+        F.coalesce(lo, node).alias("component"), star.alias("star")
+    )
+
+
+# Single-task union-find ceiling: one Python worker holds about 155 B
+# per node, at most two nodes per edge, so 1M edges cost about 0.3 GB.
+# PYGEOOPS_CC_LOCAL_MAX_EDGES may lower the gate, never raise it past this.
+_CC_LOCAL_CEILING = 1_000_000
 
 
 def connected_components(
@@ -57,45 +87,42 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node in the pair graph; component =
     min node id reachable. Alternating-star convergence in O(log n)
-    rounds; at the fixed point the edge set IS the star (node -> root),
-    so labels fall out without a final propagation pass. Convergence is
-    detected by an order-insensitive (count, bit_xor(hash)) signature —
-    one cheap agg per round over the just-checkpointed edges.
+    rounds. After each round one per-node aggregate (`_star_labels`)
+    tests for the fixed point — a forest of stars on each component's
+    minimum — and, in the round that reaches it, is the result, so no
+    round is spent confirming that nothing changed.
 
     Nodes that appear ONLY in self-pairs (id_a == id_b) are emitted as
     their own singleton components, so the result is a complete
-    node -> component map over every node mentioned in `pairs`.
+    node -> component map over every node mentioned in `pairs`. A pair
+    with a NULL id is dropped.
 
     Pass stats={} to receive {"rounds": n} — the number of
     alternating-star rounds until the fixed point (scaling evidence:
-    rounds grow O(log n))."""
+    rounds grow O(log n)); 0 when the single-task union-find ran."""
     # ONE materialization of the caller's (possibly expensive) pairs
-    # plan: both the edge set and the self-pair node set derive from
-    # the same checkpoint, so the plan is never evaluated twice
-    raw = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).localCheckpoint(eager=True)
-    e = (
-        raw.where(F.col("u") != F.col("v"))
+    # plan, self pairs kept: the edge set, the self-pair nodes and the
+    # gate's edge count (an Observation, no extra job) all come from it
+    seen = Observation("connected_components")
+    raw = (
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        .dropna()
         .distinct()
+        .observe(seen, F.count_if(F.col("u") != F.col("v")).alias("edges"))
         .localCheckpoint(eager=True)
     )
-    selfers = raw.where(F.col("u") == F.col("v")).select("u").distinct()
 
-    # Small-graph fast path (r07, guide §1.2): the alternating-star
-    # loop costs ~8 shuffle stages + a localCheckpoint + a convergence
-    # aggregate PER ROUND — pure fixed overhead when the deduplicated
-    # edge set fits one task. Below the gate, a single-task union-find
-    # (coalesce(1) + mapInPandas — no driver collect, no shuffle)
-    # computes the identical min-label components in one pass. The gate
-    # reads the count off the just-checkpointed edges (a metadata-cheap
-    # job), so at corpus scale the distributed O(log n)-round algorithm
-    # — the one that matters at 10^12 docs — runs unchanged.
+    # Small-graph fast path (r07, guide §1.2): below the gate a
+    # single-task union-find (coalesce(1) + mapInPandas — no driver
+    # collect, no shuffle) computes the identical min-label components
+    # in one pass; a self pair just registers its node.
     import os as _os
 
-    gate = int(_os.environ.get("PYGEOOPS_CC_LOCAL_MAX_EDGES", "100000"))
-    n_edges = e.count()
-    if n_edges <= gate:
+    gate = min(
+        int(_os.environ.get("PYGEOOPS_CC_LOCAL_MAX_EDGES", "100000")),
+        _CC_LOCAL_CEILING,
+    )
+    if seen.get["edges"] <= gate:
         import pandas as pd
 
         def _union_find(batches):
@@ -126,59 +153,32 @@ def connected_components(
 
         if stats is not None:
             stats["rounds"] = 0
-        out = e.coalesce(1).mapInPandas(
+        return raw.coalesce(1).mapInPandas(
             _union_find, "node long, component long"
         )
-        singles = (
-            selfers.join(out.select(F.col("node").alias("u")), "u", "left_anti")
-            .select(F.col("u").alias("node"), F.col("u").alias("component"))
-        )
-        return out.unionByName(singles)
 
-    def sig(df: DataFrame):
-        return tuple(
-            df.agg(
-                F.count("*").alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")
-            ).first()
+    e = raw.where(F.col("u") != F.col("v"))
+    selfers = raw.where(F.col("u") == F.col("v"))
+    for rounds in range(1, max_iter + 1):
+        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        fixed = Observation("connected_components_round")
+        labels = (
+            _star_labels(e, selfers)
+            .observe(fixed, F.bool_and("star").alias("star"))
+            .localCheckpoint(eager=True)
         )
-
-    prev = sig(e)
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        rounds += 1
-        cur = sig(e2)
-        e = e2
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        # reading labels off a non-star edge set would emit conflicting
-        # component rows per node — fail loudly instead (O(log n)
-        # rounds means max_iter=25 covers graphs far beyond 10^7 nodes;
-        # raise max_iter for adversarial shapes)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"alternating-star rounds; raise max_iter"
-        )
-    # star edges: (node, root) for every non-root node; add the roots
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("node")).distinct().withColumn(
-        "component", F.col("node")
+        # an empty graph has no rows: bool_and is NULL, a fixed point
+        if fixed.get["star"] is not False:
+            if stats is not None:
+                stats["rounds"] = rounds
+            return labels.select("node", "component")
+    # reading labels off a non-star edge set would emit wrong components
+    # — fail loudly instead (O(log n) rounds means max_iter=25 covers
+    # graphs far beyond 10^7 nodes; raise max_iter for adversarial shapes)
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} "
+        f"alternating-star rounds; raise max_iter"
     )
-    out = labels.unionByName(roots)
-    # self-pair-only nodes: singleton components (anti-join keeps the
-    # broadcastable small side on the right only when selfers is small;
-    # at scale this is one extra shuffle over the self-pair subset)
-    singles = (
-        selfers.join(out.select(F.col("node").alias("u")), "u", "left_anti")
-        .select(F.col("u").alias("node"), F.col("u").alias("component"))
-    )
-    return out.unionByName(singles)
 
 
 def sessionize(

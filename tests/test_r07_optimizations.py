@@ -7,7 +7,7 @@ rows of the path it replaced.
 
 from __future__ import annotations
 
-import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -71,25 +71,115 @@ def test_geo_knn_brute_escape_matches_ring_path(spark):
             c.unpersist()
 
 
-def test_cc_gate_matches_distributed_rounds(spark, monkeypatch):
-    """The <=100k-edge single-task union-find must label exactly like
-    the distributed alternating-star path (gate forced off via env)."""
+def _uf_labels(edges):
+    """Reference components: Python union-find, root = min node; a pair
+    with a NULL id is dropped."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return sorted((n, find(n)) for n in list(parent))
+
+
+CC_GRAPHS = {
+    "chain": [(i, i + 1) for i in range(100, 140)],
+    "triangle": [(200, 201), (201, 202), (200, 202)],
+    "clique": [(a, b) for a in range(10, 18) for b in range(a + 1, 18)],
+    "star_nonmin_centre": [(505, x) for x in range(500, 511) if x != 505],
+    "self_pair_only_node": [(300, 301), (400, 400)],
+    "self_pair_on_edge_node": [(300, 301), (301, 301), (302, 302)],
+    "duplicate_reversed": [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (4, 3)],
+    "empty": [],
+    "null_ids": [(1, 2), (None, 3), (4, None), (None, None)],
+    "mixed": [(i, i + 1) for i in range(100, 140)]
+    + [(200, 201), (201, 202), (200, 202), (300, 301), (400, 400)],
+}
+
+
+@pytest.mark.parametrize("graph", list(CC_GRAPHS))
+def test_cc_gate_matches_distributed_rounds(spark, monkeypatch, graph):
+    """Both sides of the CC edge gate — the single-task union-find and
+    the distributed alternating-star loop (gate forced below zero via
+    env, so that an empty graph takes it too) — must label exactly like
+    a Python union-find."""
     from pygeoops_spark.text.pipeline import connected_components
 
-    edges = [(i, i + 1) for i in range(100, 140)]          # 41-node chain
-    edges += [(200, 201), (201, 202), (200, 202)]          # triangle
-    edges += [(300, 301), (400, 400)]                      # lone edge + self
-    pairs = spark.createDataFrame(pd.DataFrame(edges, columns=["id_a", "id_b"]))
+    edges = CC_GRAPHS[graph]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    want = _uf_labels(edges)
 
     fast_stats: dict = {}
-    fast = _rows(connected_components(pairs, stats=fast_stats))
+    assert _rows(connected_components(pairs, stats=fast_stats)) == want
     assert fast_stats["rounds"] == 0  # gate path taken
 
-    monkeypatch.setenv("PYGEOOPS_CC_LOCAL_MAX_EDGES", "0")
+    monkeypatch.setenv("PYGEOOPS_CC_LOCAL_MAX_EDGES", "-1")
     dist_stats: dict = {}
-    dist = _rows(connected_components(pairs, stats=dist_stats))
+    assert _rows(connected_components(pairs, stats=dist_stats)) == want
     assert dist_stats["rounds"] >= 1  # distributed path taken
-    assert fast == dist
+
+
+def test_cc_star_forest_converges_in_one_round(spark, monkeypatch):
+    """A forest of stars whose centres are not their minimum nodes is
+    star-shaped after one alternating round; the fixed-point test must
+    see that in the same round, not spend a second one confirming it."""
+    from pygeoops_spark.text.pipeline import connected_components
+
+    edges = [(s * 10 + 5, s * 10 + j) for s in range(20) for j in range(8) if j != 5]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    monkeypatch.setenv("PYGEOOPS_CC_LOCAL_MAX_EDGES", "0")
+    stats: dict = {}
+    assert _rows(connected_components(pairs, stats=stats)) == _uf_labels(edges)
+    assert stats["rounds"] == 1
+
+
+def test_cc_gate_env_is_clamped(spark, monkeypatch):
+    """PYGEOOPS_CC_LOCAL_MAX_EDGES cannot raise the single-task gate
+    above its memory ceiling."""
+    from pygeoops_spark.text import pipeline
+
+    monkeypatch.setattr(pipeline, "_CC_LOCAL_CEILING", 2)
+    monkeypatch.setenv("PYGEOOPS_CC_LOCAL_MAX_EDGES", str(10**12))
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
+    stats: dict = {}
+    assert _rows(pipeline.connected_components(pairs, stats=stats)) == [
+        (1, 1), (2, 1), (3, 1), (4, 1)
+    ]
+    assert stats["rounds"] >= 1  # 3 edges > ceiling 2: distributed
+
+
+@pytest.mark.parametrize(
+    "edges, nodes, fixed",
+    [
+        ([(2, 1), (3, 1), (9, 8)], [7], True),   # stars on their minimum
+        ([], [7], True),                         # only an edgeless node
+        ([(1, 2)], [], False),                   # edge points smaller->larger
+        ([(3, 1), (3, 2)], [], False),           # two out-edges
+        ([(3, 2), (2, 1)], [], False),           # a target has an out-edge
+    ],
+    ids=["star_forest", "edgeless", "upward_edge", "two_out_edges", "chain"],
+)
+def test_star_labels_fixed_point_test(spark, edges, nodes, fixed):
+    """The per-node aggregate flags every non-star shape, and on a
+    star forest its labels are the components."""
+    from pygeoops_spark.text.pipeline import _star_labels
+
+    e = spark.createDataFrame(edges, "u long, v long")
+    n = spark.createDataFrame([(x,) for x in nodes], "u long")
+    rows = _star_labels(e, n).collect()
+    assert all(r["star"] for r in rows) == fixed
+    if fixed:
+        got = sorted((r["node"], r["component"]) for r in rows)
+        assert got == _uf_labels(edges + [(x, x) for x in nodes])
 
 
 def test_simhash_arrow_kernel_matches_legacy_sql_tree(spark):

@@ -328,3 +328,30 @@ def test_streaming_geofence_matches_batch_pip(spark, tmp_path):
     got = {(r[0], r[1]) for r in spark.table("geofence_t").collect()}
     assert got == expected
     assert len(got) > 0
+
+
+def test_sessionize_stream_query_restores_shuffle_partitions(spark, tmp_path, monkeypatch):
+    """_q_sessionize_stream narrows spark.sql.shuffle.partitions for the
+    stream's state; a failure after that set must still restore it."""
+    import pandas as pd
+    import pytest
+
+    import __spark_entry__ as entry
+    import pygeoops_spark.streaming.sessions as S
+
+    pd.DataFrame({"user_id": [1, 2], "ts": [1, 2]}).to_parquet(
+        tmp_path / "events.parquet"
+    )
+
+    def boom(*a, **k):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(S, "sessionize_stream", boom)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "37")
+    try:
+        with pytest.raises(RuntimeError, match="boom"):
+            entry._q_sessionize_stream(spark, str(tmp_path))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "37"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

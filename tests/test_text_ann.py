@@ -53,6 +53,76 @@ def test_minhash_lsh_finds_high_jaccard_pairs(docs):
         assert len(lsh & exact) / len(exact) >= 0.5
 
 
+def _planted_docs(spark, n_pairs=200, words=40):
+    """n_pairs docs of `words` unique tokens, each followed by a copy
+    with its first two words replaced: 3-shingle Jaccard 36/40 = 0.9
+    per planted pair (2i, 2i+1), and no shingle shared across pairs."""
+    rows = []
+    for i in range(n_pairs):
+        w = [f"w{i}_{j}" for j in range(words)]
+        rows.append((2 * i, " ".join(w)))
+        rows.append((2 * i + 1, " ".join([f"x{i}_0", f"x{i}_1"] + w[2:])))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_minhash_permutations_pick_different_minima(spark):
+    """Each of the k hash functions must be its own permutation of the
+    shingle hashes: the shingle that attains mh_j varies with j. (A
+    family without the modulus after the multiply is monotone in x, so
+    all k signatures name the same shingle and recall collapses to J.)"""
+    from pygeoops_spark.text.dedup import (
+        _hash_family,
+        minhash_signatures,
+        shingle_hash_arrays,
+    )
+
+    docs = _planted_docs(spark, n_pairs=1)
+    aset = shingle_hash_arrays(docs).where("doc_id = 0").first()["_aset"]
+    sig = minhash_signatures(docs, k=32).where("doc_id = 0").first()
+    p = (1 << 31) - 1
+    argmins = set()
+    for j, (a, b) in enumerate(_hash_family(32)):
+        h = {x: ((x % p) * (a % p) + b % p) % p for x in aset}
+        assert min(h.values()) == sig[f"mh_{j}"]
+        argmins.add(min(aset, key=h.__getitem__))
+    assert len(argmins) >= 10, f"{len(argmins)} distinct minimizing shingles of 32"
+
+
+def test_minhash_lsh_planted_pair_recall_meets_theory(spark):
+    """8 bands x 4 rows find a pair of Jaccard J with probability
+    1-(1-J^4)^8 (0.9998 at J=0.9); planted J=0.9 pairs must meet that
+    floor within a small slack, and LSH may report no other pair."""
+    from pygeoops_spark.text.dedup import minhash_lsh_pairs
+
+    n_pairs = 200
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_lsh_pairs(
+            _planted_docs(spark, n_pairs), k=32, bands=8, threshold=0.5
+        ).collect()
+    }
+    planted = {(2 * i, 2 * i + 1) for i in range(n_pairs)}
+    floor = 1 - (1 - 0.9**4) ** 8
+    assert got <= planted
+    assert len(got) / n_pairs >= floor - 0.02
+
+
+def test_simhash_kernel_null_hash_array_gives_null(spark):
+    """A NULL word-hash array yields a NULL signature, not a TypeError
+    inside the Arrow kernel; the other rows of the batch are unchanged."""
+    from pygeoops_spark.text.dedup import simhash_sig_expr
+
+    d = spark.createDataFrame(
+        [(1, None), (2, [1, 2, 3]), (3, []), (4, None)], "doc_id long, _hs array<bigint>"
+    ).withColumn("_n", F.size("_hs"))
+    got = {r["doc_id"]: r["s"] for r in d.select("doc_id", simhash_sig_expr(64).alias("s")).collect()}
+    want = {r["doc_id"]: r["s"] for r in d.where("_hs IS NOT NULL").select(
+        "doc_id", simhash_sig_expr(64).alias("s")).collect()}
+    assert got[1] is None and got[4] is None
+    assert {k: got[k] for k in (2, 3)} == want
+    assert want[2] == 3  # bits 0 and 1 are each set in 2 of 3 hashes
+
+
 def test_simhash_pairs(docs):
     from pygeoops_spark.text.dedup import simhash_pairs, simhash_signatures
 
